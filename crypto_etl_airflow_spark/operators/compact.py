@@ -6,11 +6,13 @@ scheduling overhead, metadata-bound planning, and lost scan
 throughput. Compaction rewrites a table (or one partition of it)
 into ~target-sized files.
 
-Mechanics: read → ``repartition(n)`` (n = total bytes / target) →
-write to a staging dir → atomic-ish swap. The swap uses local fs
-ops here (single-writer warehouse, same assumption as the upsert
-writer); on object storage this becomes the FileSystem API or a
-transactional format's OPTIMIZE.
+Mechanics: read → ``coalesce(n)`` (n = total bytes / target) →
+write to a staging dir → atomic-ish swap. ``coalesce`` merges the
+scan's partitions without a shuffle, so it writes at most n files
+(fewer when the scan has fewer than n partitions). The swap uses
+local fs ops here (single-writer warehouse, same assumption as the
+upsert writer); on object storage this becomes the FileSystem API or
+a transactional format's OPTIMIZE.
 """
 
 from __future__ import annotations
@@ -131,7 +133,7 @@ def compact(
     target_file_bytes: int = 128 * 1024 * 1024,
     range_cols: list[str] | None = None,
 ) -> int:
-    """Rewrite the parquet table at ``path`` into
+    """Rewrite the parquet table at ``path`` into at most
     ``ceil(size / target_file_bytes)`` files. Returns the new file
     count. Preserves rows exactly (no ordering guarantee — parquet
     tables are unordered sets).
@@ -151,7 +153,7 @@ def compact(
             *range_cols
         )
     else:
-        df = df.repartition(n_files)
+        df = df.coalesce(n_files)
     df.write.mode("overwrite").parquet(staging)
     swap_directory(staging, path)
     return parquet_file_count(path)

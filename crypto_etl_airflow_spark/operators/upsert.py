@@ -13,8 +13,10 @@ Spark realization:
 3. append write.
 
 Scale posture: the anti-join reads ONLY the key columns of the
-existing table (column pruning reaches the parquet scan), and when
-the table is date-partitioned and the batch spans few partitions, a
+existing table (column pruning reaches the parquet scan), with the
+batch's types for those columns as the read schema, so the read
+plans without a schema-inference job; and when the table is
+date-partitioned and the batch spans few partitions, a
 partition-pruning filter on the key range cuts the read further
 (``prune_filter``). Join strategy is left to AQE: a small key slice
 broadcasts, a huge one sort-merges. Like the reference (single
@@ -34,6 +36,7 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class EmptyBatchError(ValueError):
@@ -87,7 +90,13 @@ def upsert_append(
     recover_tree(path)
 
     if table_exists(spark, path):
-        existing_keys = spark.read.parquet(path).select(*keys)
+        # the batch's key types pin the read schema: no inference job,
+        # and a stored key of another type fails the scan (and so the
+        # call) instead of being coerced into the comparison
+        key_schema = T.StructType([batch.schema[k] for k in keys])
+        existing_keys = (
+            spark.read.schema(key_schema).parquet(path).select(*keys)
+        )
         if prune_filter is not None:
             existing_keys = existing_keys.filter(prune_filter)
         fresh = fresh.join(existing_keys, on=keys, how="left_anti")

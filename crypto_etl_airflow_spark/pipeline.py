@@ -11,6 +11,12 @@ is :func:`json_payload_to_df`, load is the idempotent
 raises on violation. Stages hand each other a lazy DataFrame — XCom,
 Celery and the metadata DB have no equivalent because nothing is
 serialized between stages.
+
+The hourly load stays on the JVM: the payload enters as an Arrow local
+relation (a ``LocalTableScan``, no Python worker), and both warehouse
+reads, the load's anti-join key read and the gate's table read, use
+the schema the batch already has, so neither runs a schema-inference
+job.
 """
 
 from __future__ import annotations
@@ -113,7 +119,7 @@ def run_ingest_pipeline(
 
     # quality gate over the whole warehouse (reference :109-130 +
     # include/soda/checks.yml)
-    table = spark.read.parquet(warehouse_path)
+    table = spark.read.schema(batch.schema).parquet(warehouse_path)
     scan = run_scan(
         table,
         [

@@ -561,9 +561,7 @@ def _stages(
     # work. Results are identical — the same DataFrame comes back,
     # and the similarity/dedup memo layers are lock-guarded.
     # ``SPARK_GRAFT_PIPELINE_OVERLAP=0`` forces the old inline build
-    # (an A/B measurement knob, never a semantics switch). NOTE: if
-    # the text chain raises mid-build the submitted thread finishes
-    # its bounded fit jobs and exits — nothing is left running.
+    # (an A/B measurement knob, never a semantics switch).
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -591,338 +589,339 @@ def _stages(
         _pool = ThreadPoolExecutor(max_workers=1)
         _fut = _pool.submit(_target)
 
-    # widen BEFORE the transform: the documents table arrives in a
-    # handful of file partitions, and the regexp redaction chain is
-    # the pipeline's CPU-heaviest per-row work — without the widen it
-    # runs on 3 cores of 32 (measured 8.2 s vs ~1 s at sf0.1)
-    corpus = widen_small_input(
-        _plant(load_table(spark, sf_dir, "documents"))
-    )
-
-    # 1-2: normalize + redact (shuffle-free projections)
-    norm = corpus.select(
-        "doc_id", "lang", strip_accents_latin(F.col("text")).alias("text")
-    )
-    red = norm.select(
-        "doc_id", "lang", redact_pii(F.col("text")).alias("text")
-    )
-    # PHASE BARRIER: materialize the transformed corpus. Without it,
-    # Catalyst's projection collapse re-inlines the fold+redact
-    # expression chain into EVERY downstream consumer (the Gopher
-    # signals alone reference the token array ~8×, MinHash adds 32
-    # signature aggregations over shingles of it) and the plan/codegen
-    # blows the driver heap — observed, not hypothetical. A real
-    # pipeline materializes between phases for the same reason; at
-    # cluster scale this barrier is the inter-stage parquet write
-    # (barrier='parquet'|'checkpoint', _barrier_fn).
-    #
-    # The Gopher signals (same expressions as text_gopher_filter)
-    # ride in this SAME materialization pass: the token array is
-    # built once for n_tokens AND the four quality signals, and the
-    # downstream gate degenerates to a constant-width comparison
-    # filter — so g1 needs no barrier of its own (its three consumers
-    # re-apply a cheap filter over the feat cache instead of a
-    # tokenize-heavy expression chain). One corpus scan, one barrier
-    # job, and one tokenization replace the former two of each.
-    t = F.col("text")
-    toks = tokens(t)
-    n_words = F.size(toks)
-    mwl = mean_token_length(t)
-    fra = F.round(
-        F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]"))) / n_words, 6
-    )
-    nst = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n_words - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    dbf = F.when(n_words < 2, F.lit(0.0)).otherwise(
-        F.round(1 - F.size(F.array_distinct(bigrams)) / (n_words - 1), 6)
-    )
-    # The exact-dedup fingerprint also rides the barrier (32-char md5
-    # — computed once here so the dedup stage downstream is a NARROW
-    # window over (doc_id, fp), never a text shuffle: the r14 ×1000
-    # disk lesson below).
-    feat_wide = _bar(
-        red.select(
-            "doc_id",
-            "lang",
-            "text",
-            n_words.alias("n_tokens"),
-            _admission_hash().alias("h"),
-            fingerprint(F.col("text")).alias("fp"),
-            mwl.alias("__mwl"),
-            fra.alias("__fra"),
-            nst.alias("__nst"),
-            dbf.alias("__dbf"),
-        ),
-        "feat",
-    )
-    feat = feat_wide.select("doc_id", "lang", "text", "n_tokens", "h")
-    featn = feat_wide.select("doc_id", "lang", "n_tokens", "h")
-
-    # NARROW DATAFLOW through the gates — the r14 ×1000 lesson. The
-    # first ×1000 funnel run filled 79 GB of spill disk and died: the
-    # text column (the corpus itself) was riding through every
-    # id-filter sort-merge join (g2, g3, g4, g5, g6) and both
-    # admission prefix-sum shuffles, so each gate re-shuffled the
-    # whole corpus and the accumulated shuffle files exceeded the
-    # node's disk. The gates only DECIDE ids — so the chain below
-    # carries (doc_id, lang, n_tokens, h, fp) at ~40 B/row and text
-    # is joined back exactly TWICE: once building the g4 barrier
-    # (MinHash needs shingles) and once at final packing. At 100 TB
-    # the same math holds: id+meta rows are ~3 orders smaller than
-    # documents, and the two text joins are the irreducible ones.
-
-    # 3: Gopher gate — a pure comparison filter over the materialized
-    # signals (n_words ≡ n_tokens, computed once above)
-    nt = F.col("n_tokens")
-    _gopher = (
-        (nt >= 20)
-        & (nt <= 100000)
-        & (F.col("__mwl") >= 3)
-        & (F.col("__mwl") <= 10)
-        & (F.col("__fra") >= 0.8)
-        & (F.col("__nst") >= 2)
-        & (F.col("__dbf") <= 0.5)
-    )
-    g1n = feat_wide.filter(_gopher).select(
-        "doc_id", "lang", "n_tokens", "h", "fp"
-    )
-    # text view of the same survivors: a pure FILTER over the barrier
-    # (narrow lineage, no shuffle) — the only text source downstream
-    g1 = feat_wide.filter(_gopher).select(
-        "doc_id", "lang", "text", "n_tokens", "h"
-    )
-
-    # 4: classifier gate with TRAINED weights (VERDICT r12 item 2):
-    # blocklist weak supervision — the seed label is "no junk-lexicon
-    # hit" (the way production quality filters bootstrap from a
-    # blocklist/heuristic seed), the NB log-odds fit is
-    # train_bucket_weights' certified closed form, and the learned
-    # weights generalize the junk signal to the whole spam vocabulary
-    # rather than just the literal blocklist. Weights are dyadic-
-    # quantized (k/1024, the lm.py discipline) so per-doc margin sums
-    # are association-order-exact in both engines.
-    # Fit and inference share ONE exploded bucket table (persisted):
-    # the train aggregation and the per-doc margin scoring consume the
-    # same (doc_id, label, bucket) rows instead of each re-tokenizing
-    # and re-hashing the gate survivors — one corpus-tokens pass where
-    # :func:`train_bucket_weights` + :func:`classifier_scores` chained
-    # naively would take two. Same closed form, same dyadic-quantized
-    # weights, same kept set (a no-token doc appears in no bucket row
-    # and is dropped by the inner join, exactly classifier_scores'
-    # kept=false verdict — and cannot occur post-Gopher anyway).
-    from ..operators.dedup import _reuse
-
-    # ONE exploded token table serves the classifier gate AND the LM
-    # gate (r14: formerly two separate persisted explodes — btok from
-    # g1's text, ltok from g2's text-join — i.e. two corpus tokenize
-    # passes and one corpus-text shuffle; now the LM slice is a
-    # narrow id join against this shared cache).
-    seed_pos = ~F.col("text").contains(_JUNK)
-    exploded = _reuse(
-        g1.select(
-            "doc_id",
-            (F.col("lang") == "en").alias("__en"),
-            seed_pos.alias("__pos"),
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        ).filter(F.col("tok") != "")
-    )
-    btok = exploded.select(
-        "doc_id", "__pos", feature_bucket(F.col("tok")).alias("bucket")
-    )
-    counts = btok.groupBy("bucket").agg(
-        F.sum(F.when(F.col("__pos"), 1).otherwise(0)).alias("n_pos"),
-        F.sum(F.when(F.col("__pos"), 0).otherwise(1)).alias("n_neg"),
-    )
-    totals = counts.agg(
-        F.sum("n_pos").alias("tot_pos"), F.sum("n_neg").alias("tot_neg")
-    )
-    raw_w = (
-        F.log((F.col("n_pos") + F.lit(0.5)) / (F.col("tot_pos") + F.lit(0.5)))
-        - F.log((F.col("n_neg") + F.lit(0.5)) / (F.col("tot_neg") + F.lit(0.5)))
-    )
-    weights = counts.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        (F.round(raw_w * F.lit(1024)) / F.lit(1024)).alias("weight"),
-    )
-    kept_ids = (
-        btok.join(F.broadcast(weights), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(F.avg(F.coalesce("weight", F.lit(0.0))).alias("margin"))
-        .filter(F.col("margin") >= 0)
-        .select("doc_id")
-    )
-    # barrier the ID LIST, not a text-bearing join result (the r12
-    # driver-heap rationale was cutting recomputation of the
-    # classifier chain per consumer — an id barrier gives the same
-    # protection at ~1/1000 the block size)
-    kept_ids = _bar(kept_ids, "g2")
-    g2n = g1n.join(kept_ids, "doc_id")
-    g2 = g1.join(kept_ids, "doc_id")  # lazy text view (tests/audits)
-
-    # 5: perplexity percentile gate; LM trains on surviving 'en' docs.
-    # Same shared-token-pass fusion as the classifier gate above: ONE
-    # exploded token table (persisted) feeds both the LM fit (its 'en'
-    # slice) and the scoring of every survivor, where
-    # :func:`train_unigram_lm` + :func:`unigram_logppl` chained
-    # naively each re-tokenize g2. Identical closed form: add-α
-    # smoothing over the top-4096 types of the 'en' slice, proper OOV
-    # tail mass, dyadic-quantized ln-probabilities (operators/lm.py) —
-    # a tokenless doc appears in no token row, gets no ppl, and is
-    # dropped exactly as the isNotNull filter on unigram_logppl's
-    # NULL-ppl row dropped it.
-    _VOCAB_SIZE, _ALPHA = 4096, 0.5
-    _dy = lambda x: F.round(x * F.lit(1024)) / F.lit(1024)  # noqa: E731
-    # LM token slice: narrow id join against the SHARED exploded
-    # cache — token rows only, never a corpus-text shuffle
-    ltok = exploded.join(kept_ids, "doc_id").select(
-        "doc_id", "__en", "tok"
-    )
-    lm_counts = (
-        ltok.filter(F.col("__en")).groupBy("tok").agg(F.count("*").alias("c"))
-    )
-    ranked = lm_counts.withColumn(
-        "__rn", F.row_number().over(W.orderBy(F.desc("c"), F.asc("tok")))
-    )
-    lm_totals = ranked.agg(
-        F.sum("c").alias("t"),
-        F.least(F.count("*"), F.lit(_VOCAB_SIZE)).alias("v"),
-        F.sum(
-            F.when(F.col("__rn") <= _VOCAB_SIZE, F.col("c")).otherwise(F.lit(0))
-        ).alias("tc"),
-    )
-    a = F.lit(_ALPHA)
-    denom = F.col("t") + a * (F.col("v") + F.lit(1))
-    vocab = (
-        ranked.filter(F.col("__rn") <= _VOCAB_SIZE)
-        .crossJoin(F.broadcast(lm_totals))
-        .select("tok", _dy(F.log((F.col("c") + a) / denom)).alias("lnp"))
-    )
-    stats = lm_totals.select(
-        _dy(F.log((F.col("t") - F.col("tc") + a) / denom)).alias("oov_lnp")
-    )
-    ppl = (
-        ltok.join(F.broadcast(vocab), "tok", "left")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.coalesce("lnp", F.col("oov_lnp")).alias("lnp"))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.exp(-F.sum("lnp") / F.count("*")), 6
-            ).alias("ppl")
+    # if the text chain raises, the finally below still shuts the
+    # SemDeDup worker down (a queued build cancelled, a running one
+    # joined), so no thread outlives the call
+    try:
+        # widen BEFORE the transform: the documents table arrives in a
+        # handful of file partitions, and the regexp redaction chain is
+        # the pipeline's CPU-heaviest per-row work — without the widen it
+        # runs on 3 cores of 32 (measured 8.2 s vs ~1 s at sf0.1)
+        corpus = widen_small_input(
+            _plant(load_table(spark, sf_dir, "documents"))
         )
-    )
-    # percentile gate WITHOUT the global percent_rank window (which
-    # funnels one (doc_id, ppl) row per surviving document through a
-    # single sort task): two-phase rank, same decomposition as the
-    # packing stages — buckets from a MONOTONE function of ppl are
-    # order-aligned, ties share a value hence a bucket, so
-    # bucket-offset + local rank() reproduces global rank() exactly
-    # and percent_rank = (rank−1)/(n−1) is arithmetic on top.
-    n_ppl = ppl.agg(F.count("*").alias("__n"))
-    pplb = ppl.withColumn("__pb", F.floor("ppl").cast("long"))
-    pb_off = (
-        pplb.groupBy("__pb")
-        .agg(F.count("*").alias("__c"))
-        .select(
-            "__pb",
-            F.coalesce(
-                F.sum("__c").over(
-                    W.orderBy("__pb").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("__roff"),
-        )
-    )
-    grank = (
-        F.col("__roff")
-        + F.rank().over(W.partitionBy("__pb").orderBy("ppl"))
-        - 1
-    )
-    pr = F.when(F.col("__n") == 1, F.lit(0.0)).otherwise(
-        grank / (F.col("__n") - 1)
-    )
-    # id barrier, symmetric with kept_ids: every downstream consumer
-    # (g3n count, g4n build) would otherwise re-run the whole LM +
-    # perplexity chain — at ×1000 that is another full round of
-    # token-table shuffles per consumer (r14 disk lesson)
-    keep_ids = _bar(
-        pplb.join(F.broadcast(pb_off), "__pb")
-        .crossJoin(F.broadcast(n_ppl))
-        .select("doc_id", pr.alias("pr"))
-        .filter(F.col("pr") <= _PPL_KEEP)
-        .select("doc_id"),
-        "g3",
-    )
-    # both token-table consumers (classifier fit via kept_ids, LM fit
-    # via keep_ids) are now materialized — the exploded cache is dead
-    # weight from here; free its blocks before the dedup stages start
-    # filling the same disk.
-    # INVARIANT (ADVICE r14): this unpersist runs at PLAN-BUILD time
-    # and is correct only because every _barrier_fn mode is EAGER —
-    # the kept_ids and keep_ids barriers above have already consumed
-    # the cache by the time control reaches here. A lazy barrier mode
-    # would silently turn both gate stages into full re-tokenize
-    # passes; refuse it here rather than degrade.
-    assert exploded.storageLevel.useMemory or exploded.storageLevel.useDisk, (
-        "exploded token cache was never persisted — the shared-token-"
-        "pass optimization is broken"
-    )
-    exploded.unpersist()
-    g3n = g2n.join(keep_ids, "doc_id")
-    g3 = g2.join(keep_ids, "doc_id")  # lazy text view
 
-    # 6: exact dedup (min-id canonical) — a NARROW window over the
-    # barrier-precomputed fingerprint (dedup_ops.exact_duplicates'
-    # exact shape, minus its text pass: fp is the same md5 of the
-    # normalized text, computed once in the feat barrier)
-    wfp = W.partitionBy("fp")
-    # barriered like its text twin below: g5n/g6n/adm all build on
-    # g4n, and without the cut each would re-inline the whole
-    # classifier+LM subplan (driver-heap blowup — the r12 lesson,
-    # re-observed on the narrow chain in r14). Rows are ~32 B, so
-    # this barrier is effectively free.
-    g4n = _bar(
-        g3n.withColumn("__keep", F.min("doc_id").over(wfp))
-        .filter(F.col("doc_id") == F.col("__keep"))
-        .select("doc_id", "lang", "n_tokens", "h"),
-        "g4n",
-    )
-    # TEXT JOIN #1 (of exactly two): the MinHash stage needs shingles,
-    # so the surviving ids pull text from the g1 filter view over the
-    # feat barrier. Barriered: the banded self-join would otherwise
-    # recompute the entire upstream once per band side.
-    g4 = _bar(
-        g1.select("doc_id", "text").join(g4n, "doc_id").select(
+        # 1-2: normalize + redact (shuffle-free projections)
+        norm = corpus.select(
+            "doc_id", "lang", strip_accents_latin(F.col("text")).alias("text")
+        )
+        red = norm.select(
+            "doc_id", "lang", redact_pii(F.col("text")).alias("text")
+        )
+        # PHASE BARRIER: materialize the transformed corpus. Without it,
+        # Catalyst's projection collapse re-inlines the fold+redact
+        # expression chain into EVERY downstream consumer (the Gopher
+        # signals alone reference the token array ~8×, MinHash adds 32
+        # signature aggregations over shingles of it) and the plan/codegen
+        # blows the driver heap — observed, not hypothetical. A real
+        # pipeline materializes between phases for the same reason; at
+        # cluster scale this barrier is the inter-stage parquet write
+        # (barrier='parquet'|'checkpoint', _barrier_fn).
+        #
+        # The Gopher signals (same expressions as text_gopher_filter)
+        # ride in this SAME materialization pass: the token array is
+        # built once for n_tokens AND the four quality signals, and the
+        # downstream gate degenerates to a constant-width comparison
+        # filter — so g1 needs no barrier of its own (its three consumers
+        # re-apply a cheap filter over the feat cache instead of a
+        # tokenize-heavy expression chain). One corpus scan, one barrier
+        # job, and one tokenization replace the former two of each.
+        t = F.col("text")
+        toks = tokens(t)
+        n_words = F.size(toks)
+        mwl = mean_token_length(t)
+        fra = F.round(
+            F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]"))) / n_words, 6
+        )
+        nst = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
+        bigrams = F.transform(
+            F.sequence(F.lit(1), n_words - 1),
+            lambda i: F.concat_ws(
+                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+            ),
+        )
+        dbf = F.when(n_words < 2, F.lit(0.0)).otherwise(
+            F.round(1 - F.size(F.array_distinct(bigrams)) / (n_words - 1), 6)
+        )
+        # The exact-dedup fingerprint also rides the barrier (32-char md5
+        # — computed once here so the dedup stage downstream is a NARROW
+        # window over (doc_id, fp), never a text shuffle: the r14 ×1000
+        # disk lesson below).
+        feat_wide = _bar(
+            red.select(
+                "doc_id",
+                "lang",
+                "text",
+                n_words.alias("n_tokens"),
+                _admission_hash().alias("h"),
+                fingerprint(F.col("text")).alias("fp"),
+                mwl.alias("__mwl"),
+                fra.alias("__fra"),
+                nst.alias("__nst"),
+                dbf.alias("__dbf"),
+            ),
+            "feat",
+        )
+        feat = feat_wide.select("doc_id", "lang", "text", "n_tokens", "h")
+        featn = feat_wide.select("doc_id", "lang", "n_tokens", "h")
+
+        # NARROW DATAFLOW through the gates — the r14 ×1000 lesson. The
+        # first ×1000 funnel run filled 79 GB of spill disk and died: the
+        # text column (the corpus itself) was riding through every
+        # id-filter sort-merge join (g2, g3, g4, g5, g6) and both
+        # admission prefix-sum shuffles, so each gate re-shuffled the
+        # whole corpus and the accumulated shuffle files exceeded the
+        # node's disk. The gates only DECIDE ids — so the chain below
+        # carries (doc_id, lang, n_tokens, h, fp) at ~40 B/row and text
+        # is joined back exactly TWICE: once building the g4 barrier
+        # (MinHash needs shingles) and once at final packing. At 100 TB
+        # the same math holds: id+meta rows are ~3 orders smaller than
+        # documents, and the two text joins are the irreducible ones.
+
+        # 3: Gopher gate — a pure comparison filter over the materialized
+        # signals (n_words ≡ n_tokens, computed once above)
+        nt = F.col("n_tokens")
+        _gopher = (
+            (nt >= 20)
+            & (nt <= 100000)
+            & (F.col("__mwl") >= 3)
+            & (F.col("__mwl") <= 10)
+            & (F.col("__fra") >= 0.8)
+            & (F.col("__nst") >= 2)
+            & (F.col("__dbf") <= 0.5)
+        )
+        g1n = feat_wide.filter(_gopher).select(
+            "doc_id", "lang", "n_tokens", "h", "fp"
+        )
+        # text view of the same survivors: a pure FILTER over the barrier
+        # (narrow lineage, no shuffle) — the only text source downstream
+        g1 = feat_wide.filter(_gopher).select(
             "doc_id", "lang", "text", "n_tokens", "h"
-        ),
-        "g4",
-    )
+        )
 
-    # 7: MinHash-LSH verified near-dups — drop the larger id
-    mh = dedup_ops.minhash_lsh_pairs(
-        g4, "doc_id", "text", n=3, threshold=0.8, num_hashes=32, bands=8,
-        portable=True,
-    )
-    mh_ids = mh.select(F.col("id_b").alias("doc_id")).distinct()
-    g5n = g4n.join(mh_ids, "doc_id", "left_anti")
-    g5 = g4.join(mh_ids, "doc_id", "left_anti")  # lazy text view
+        # 4: classifier gate with TRAINED weights (VERDICT r12 item 2):
+        # blocklist weak supervision — the seed label is "no junk-lexicon
+        # hit" (the way production quality filters bootstrap from a
+        # blocklist/heuristic seed), the NB log-odds fit is
+        # train_bucket_weights' certified closed form, and the learned
+        # weights generalize the junk signal to the whole spam vocabulary
+        # rather than just the literal blocklist. Weights are dyadic-
+        # quantized (k/1024, the lm.py discipline) so per-doc margin sums
+        # are association-order-exact in both engines.
+        # Fit and inference share ONE exploded bucket table (persisted):
+        # the train aggregation and the per-doc margin scoring consume the
+        # same (doc_id, label, bucket) rows instead of each re-tokenizing
+        # and re-hashing the gate survivors — one corpus-tokens pass where
+        # :func:`train_bucket_weights` + :func:`classifier_scores` chained
+        # naively would take two. Same closed form, same dyadic-quantized
+        # weights, same kept set (a no-token doc appears in no bucket row
+        # and is dropped by the inner join, exactly classifier_scores'
+        # kept=false verdict — and cannot occur post-Gopher anyway).
+        from ..operators.dedup import _reuse
 
-    # 8: SemDeDup verdicts from the embedding space, applied by id —
-    # built concurrently with the barrier chain above (see the
-    # submit at the top of this function); join the thread here, at
-    # the branch's dataflow position
-    if _fut is not None:
-        try:
-            verd = _fut.result()
-        finally:
-            _pool.shutdown(wait=False)
-    else:
-        verd = _semdedup_verdicts()
+        # ONE exploded token table serves the classifier gate AND the LM
+        # gate (r14: formerly two separate persisted explodes — btok from
+        # g1's text, ltok from g2's text-join — i.e. two corpus tokenize
+        # passes and one corpus-text shuffle; now the LM slice is a
+        # narrow id join against this shared cache).
+        seed_pos = ~F.col("text").contains(_JUNK)
+        exploded = _reuse(
+            g1.select(
+                "doc_id",
+                (F.col("lang") == "en").alias("__en"),
+                seed_pos.alias("__pos"),
+                F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
+            ).filter(F.col("tok") != "")
+        )
+        btok = exploded.select(
+            "doc_id", "__pos", feature_bucket(F.col("tok")).alias("bucket")
+        )
+        counts = btok.groupBy("bucket").agg(
+            F.sum(F.when(F.col("__pos"), 1).otherwise(0)).alias("n_pos"),
+            F.sum(F.when(F.col("__pos"), 0).otherwise(1)).alias("n_neg"),
+        )
+        totals = counts.agg(
+            F.sum("n_pos").alias("tot_pos"), F.sum("n_neg").alias("tot_neg")
+        )
+        raw_w = (
+            F.log((F.col("n_pos") + F.lit(0.5)) / (F.col("tot_pos") + F.lit(0.5)))
+            - F.log((F.col("n_neg") + F.lit(0.5)) / (F.col("tot_neg") + F.lit(0.5)))
+        )
+        weights = counts.crossJoin(F.broadcast(totals)).select(
+            "bucket",
+            (F.round(raw_w * F.lit(1024)) / F.lit(1024)).alias("weight"),
+        )
+        kept_ids = (
+            btok.join(F.broadcast(weights), "bucket", "left")
+            .groupBy("doc_id")
+            .agg(F.avg(F.coalesce("weight", F.lit(0.0))).alias("margin"))
+            .filter(F.col("margin") >= 0)
+            .select("doc_id")
+        )
+        # barrier the ID LIST, not a text-bearing join result (the r12
+        # driver-heap rationale was cutting recomputation of the
+        # classifier chain per consumer — an id barrier gives the same
+        # protection at ~1/1000 the block size)
+        kept_ids = _bar(kept_ids, "g2")
+        g2n = g1n.join(kept_ids, "doc_id")
+        g2 = g1.join(kept_ids, "doc_id")  # lazy text view (tests/audits)
+
+        # 5: perplexity percentile gate; LM trains on surviving 'en' docs.
+        # Same shared-token-pass fusion as the classifier gate above: ONE
+        # exploded token table (persisted) feeds both the LM fit (its 'en'
+        # slice) and the scoring of every survivor, where
+        # :func:`train_unigram_lm` + :func:`unigram_logppl` chained
+        # naively each re-tokenize g2. Identical closed form: add-α
+        # smoothing over the top-4096 types of the 'en' slice, proper OOV
+        # tail mass, dyadic-quantized ln-probabilities (operators/lm.py) —
+        # a tokenless doc appears in no token row, gets no ppl, and is
+        # dropped exactly as the isNotNull filter on unigram_logppl's
+        # NULL-ppl row dropped it.
+        _VOCAB_SIZE, _ALPHA = 4096, 0.5
+        _dy = lambda x: F.round(x * F.lit(1024)) / F.lit(1024)  # noqa: E731
+        # LM token slice: narrow id join against the SHARED exploded
+        # cache — token rows only, never a corpus-text shuffle
+        ltok = exploded.join(kept_ids, "doc_id").select(
+            "doc_id", "__en", "tok"
+        )
+        lm_counts = (
+            ltok.filter(F.col("__en")).groupBy("tok").agg(F.count("*").alias("c"))
+        )
+        ranked = lm_counts.withColumn(
+            "__rn", F.row_number().over(W.orderBy(F.desc("c"), F.asc("tok")))
+        )
+        lm_totals = ranked.agg(
+            F.sum("c").alias("t"),
+            F.least(F.count("*"), F.lit(_VOCAB_SIZE)).alias("v"),
+            F.sum(
+                F.when(F.col("__rn") <= _VOCAB_SIZE, F.col("c")).otherwise(F.lit(0))
+            ).alias("tc"),
+        )
+        a = F.lit(_ALPHA)
+        denom = F.col("t") + a * (F.col("v") + F.lit(1))
+        vocab = (
+            ranked.filter(F.col("__rn") <= _VOCAB_SIZE)
+            .crossJoin(F.broadcast(lm_totals))
+            .select("tok", _dy(F.log((F.col("c") + a) / denom)).alias("lnp"))
+        )
+        stats = lm_totals.select(
+            _dy(F.log((F.col("t") - F.col("tc") + a) / denom)).alias("oov_lnp")
+        )
+        ppl = (
+            ltok.join(F.broadcast(vocab), "tok", "left")
+            .crossJoin(F.broadcast(stats))
+            .select("doc_id", F.coalesce("lnp", F.col("oov_lnp")).alias("lnp"))
+            .groupBy("doc_id")
+            .agg(
+                F.round(
+                    F.exp(-F.sum("lnp") / F.count("*")), 6
+                ).alias("ppl")
+            )
+        )
+        # percentile gate WITHOUT the global percent_rank window (which
+        # funnels one (doc_id, ppl) row per surviving document through a
+        # single sort task): two-phase rank, same decomposition as the
+        # packing stages — buckets from a MONOTONE function of ppl are
+        # order-aligned, ties share a value hence a bucket, so
+        # bucket-offset + local rank() reproduces global rank() exactly
+        # and percent_rank = (rank−1)/(n−1) is arithmetic on top.
+        n_ppl = ppl.agg(F.count("*").alias("__n"))
+        pplb = ppl.withColumn("__pb", F.floor("ppl").cast("long"))
+        pb_off = (
+            pplb.groupBy("__pb")
+            .agg(F.count("*").alias("__c"))
+            .select(
+                "__pb",
+                F.coalesce(
+                    F.sum("__c").over(
+                        W.orderBy("__pb").rowsBetween(W.unboundedPreceding, -1)
+                    ),
+                    F.lit(0),
+                ).alias("__roff"),
+            )
+        )
+        grank = (
+            F.col("__roff")
+            + F.rank().over(W.partitionBy("__pb").orderBy("ppl"))
+            - 1
+        )
+        pr = F.when(F.col("__n") == 1, F.lit(0.0)).otherwise(
+            grank / (F.col("__n") - 1)
+        )
+        # id barrier, symmetric with kept_ids: every downstream consumer
+        # (g3n count, g4n build) would otherwise re-run the whole LM +
+        # perplexity chain — at ×1000 that is another full round of
+        # token-table shuffles per consumer (r14 disk lesson)
+        keep_ids = _bar(
+            pplb.join(F.broadcast(pb_off), "__pb")
+            .crossJoin(F.broadcast(n_ppl))
+            .select("doc_id", pr.alias("pr"))
+            .filter(F.col("pr") <= _PPL_KEEP)
+            .select("doc_id"),
+            "g3",
+        )
+        # both token-table consumers (classifier fit via kept_ids, LM fit
+        # via keep_ids) are now materialized — the exploded cache is dead
+        # weight from here; free its blocks before the dedup stages start
+        # filling the same disk.
+        # INVARIANT (ADVICE r14): this unpersist runs at PLAN-BUILD time
+        # and is correct only because every _barrier_fn mode is EAGER —
+        # the kept_ids and keep_ids barriers above have already consumed
+        # the cache by the time control reaches here. A lazy barrier mode
+        # would silently turn both gate stages into full re-tokenize
+        # passes; refuse it here rather than degrade.
+        assert exploded.storageLevel.useMemory or exploded.storageLevel.useDisk, (
+            "exploded token cache was never persisted — the shared-token-"
+            "pass optimization is broken"
+        )
+        exploded.unpersist()
+        g3n = g2n.join(keep_ids, "doc_id")
+        g3 = g2.join(keep_ids, "doc_id")  # lazy text view
+
+        # 6: exact dedup (min-id canonical) — a NARROW window over the
+        # barrier-precomputed fingerprint (dedup_ops.exact_duplicates'
+        # exact shape, minus its text pass: fp is the same md5 of the
+        # normalized text, computed once in the feat barrier)
+        wfp = W.partitionBy("fp")
+        # barriered like its text twin below: g5n/g6n/adm all build on
+        # g4n, and without the cut each would re-inline the whole
+        # classifier+LM subplan (driver-heap blowup — the r12 lesson,
+        # re-observed on the narrow chain in r14). Rows are ~32 B, so
+        # this barrier is effectively free.
+        g4n = _bar(
+            g3n.withColumn("__keep", F.min("doc_id").over(wfp))
+            .filter(F.col("doc_id") == F.col("__keep"))
+            .select("doc_id", "lang", "n_tokens", "h"),
+            "g4n",
+        )
+        # TEXT JOIN #1 (of exactly two): the MinHash stage needs shingles,
+        # so the surviving ids pull text from the g1 filter view over the
+        # feat barrier. Barriered: the banded self-join would otherwise
+        # recompute the entire upstream once per band side.
+        g4 = _bar(
+            g1.select("doc_id", "text").join(g4n, "doc_id").select(
+                "doc_id", "lang", "text", "n_tokens", "h"
+            ),
+            "g4",
+        )
+
+        # 7: MinHash-LSH verified near-dups — drop the larger id
+        mh = dedup_ops.minhash_lsh_pairs(
+            g4, "doc_id", "text", n=3, threshold=0.8, num_hashes=32, bands=8,
+            portable=True,
+        )
+        mh_ids = mh.select(F.col("id_b").alias("doc_id")).distinct()
+        g5n = g4n.join(mh_ids, "doc_id", "left_anti")
+        g5 = g4.join(mh_ids, "doc_id", "left_anti")  # lazy text view
+
+        # 8: SemDeDup verdicts from the embedding space, applied by id —
+        # built concurrently with the barrier chain above (see the
+        # submit at the top of this function); join the thread here, at
+        # the branch's dataflow position
+        verd = _fut.result() if _fut is not None else _semdedup_verdicts()
+    finally:
+        if _pool is not None:
+            _pool.shutdown(wait=True, cancel_futures=True)
     verd_ids = verd.filter(F.col("is_duplicate")).select(
         F.col("vec_id").alias("doc_id")
     )

@@ -8,9 +8,14 @@ dags/crypto-etl-pipeline-psql.py:35-65): a nested API payload
 Spark-first shape (SURVEY.md §2.2 P1-P4): the payload enters as ONE
 string column, ``F.from_json`` parses it to a MapType, ``F.explode``
 unpivots one row per outer key, and the key becomes a column — all
-JVM-side expressions inside whole-stage codegen. The same plan works
-unchanged when the input is millions of payload documents read from a
-landing zone instead of one driver-fetched string.
+JVM-side expressions inside whole-stage codegen. The string column is
+built from a ``pyarrow`` table, so it plans as a JVM
+``LocalTableScan``: no job that touches the batch (the loader's
+emptiness check, its anti-join) starts a Python worker. A list of
+tuples would plan as an ``ExistingRDD`` fed by a PythonRDD, one Python
+worker per task for one string. The same plan works unchanged when the
+input is millions of payload documents read from a landing zone
+instead of one driver-fetched string.
 
 Reference semantics preserved:
 - empty payload raises (reference :45-46 raises ValueError);
@@ -26,6 +31,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,7 +62,7 @@ def json_payload_to_df(
     if not payload_json or payload_json.strip() in ("", "{}", "null"):
         raise ValueError("No data to transform: empty payload")
 
-    raw = spark.createDataFrame([(payload_json,)], "payload string")
+    raw = spark.createDataFrame(pa.table({"payload": [payload_json]}))
     ts_col = (
         F.lit(extracted_at).cast("timestamp")
         if extracted_at is not None

@@ -28,11 +28,16 @@ _SLOW_IDS = frozenset(
 )
 
 
+def slow_tier_id(nodeid: str) -> str:
+    """A collected node id as tests/slow_tier.txt spells it: relative
+    to tests/, "<file>.py::<test>[param]". Only the leading directory
+    is stripped, so a parameter id that contains "/" stays whole."""
+    return nodeid.removeprefix("tests/")
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        # node id relative to tests/: "<file>.py::<test>[param]"
-        nid = item.nodeid.split("/")[-1]
-        if nid in _SLOW_IDS:
+        if slow_tier_id(item.nodeid) in _SLOW_IDS:
             item.add_marker(pytest.mark.slow)
 
 from crypto_etl_airflow_spark.session import get_spark  # noqa: E402

@@ -156,3 +156,26 @@ def test_merge_preserves_old_suffixed_partition_value(spark, tmp_path):
     merge_replace_keys(spark, second, path, keys=["id", "day"], partition_by=["day"])
     got = sorted((r.id, r.day, r.v) for r in spark.read.parquet(path).collect())
     assert got == [(1, "foo.__old", 1.0), (2, "foo", 2.0), (3, "foo", 3.0)]
+
+
+def test_compact_never_exceeds_size_bound(spark, tmp_path):
+    """``coalesce`` cannot add partitions: with a small target the
+    rewrite writes at most ceil(size / target) files, and the rows
+    are the same multiset."""
+    import math
+    from collections import Counter
+
+    from crypto_etl_airflow_spark.operators.compact import _dir_bytes
+
+    path = str(tmp_path / "tbl")
+    ev = load_table(spark, SF_SMOKE, "events")
+    ev.repartition(12).write.parquet(path)
+    target = 16 * 1024
+    bound = math.ceil(_dir_bytes(path) / target)
+    before = Counter(tuple(r) for r in spark.read.parquet(path).collect())
+
+    n_after = compact(spark, path, target_file_bytes=target)
+    assert 1 <= n_after <= bound
+    assert n_after == parquet_file_count(path)
+    back = spark.read.parquet(path).select(*ev.columns)
+    assert Counter(tuple(r) for r in back.collect()) == before

@@ -56,3 +56,12 @@ def test_distributed_payloads_variant(spark):
     out = payloads_to_df(src).collect()
     assert len(out) == 5
     assert {r.batch for r in out} == {"batch1", "batch2"}
+
+
+def test_payload_plans_as_jvm_local_relation(spark):
+    """The one-string batch is an Arrow-built local relation: no job
+    that touches it starts a Python worker."""
+    df = json_payload_to_df(spark, PAYLOAD, extracted_at=TS)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

@@ -111,3 +111,32 @@ def test_pipeline_retries_transient_extract_failure(spark, tmp_path):
     )
     assert written == 4 and not scan.failed
     assert fails["n"] == 3 and slept == [120.0, 120.0]
+
+
+#: Spark jobs one fresh hourly run starts against an existing warehouse:
+#: the loader's emptiness check, the anti-join's adaptive stages and its
+#: checkpoint, the append, and the gate's aggregate. A batch planned over
+#: a Python-fed RDD or a warehouse read that infers its schema adds jobs.
+FRESH_RUN_JOB_BUDGET = 9
+
+
+def test_hourly_run_job_budget(spark, tmp_path):
+    wh = str(tmp_path / "crypto_prices")
+    run_ingest_pipeline(
+        spark, wh, fetch=fake_fetch, extracted_at=NOW - dt.timedelta(hours=1),
+        now=NOW,
+    )
+    sc = spark.sparkContext
+    group = "hourly-run-budget"
+    sc.setJobGroup(group, "one fresh hourly run")
+    try:
+        written, _ = run_ingest_pipeline(
+            spark, wh, fetch=fake_fetch,
+            extracted_at=NOW - dt.timedelta(minutes=30), now=NOW,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert written == 4
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= FRESH_RUN_JOB_BUDGET, sorted(jobs)

@@ -3,6 +3,11 @@ certifies VALUES; these tests pin that the composition has TEETH —
 each stage demonstrably drops documents on the planted corpus — and
 that the funnel is internally consistent with the manifest."""
 
+import concurrent.futures as cf
+import threading
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_etl_airflow_spark.plans.pipeline_curate import (
@@ -118,3 +123,39 @@ def test_trained_gate_drops_every_planted_junk_doc(spark):
         .count()
     )
     assert dropped_clean <= 0.05 * g1.filter(~junk).count()
+
+
+def test_text_chain_failure_leaves_no_semdedup_worker(spark, monkeypatch):
+    """If building the text chain raises while the SemDeDup branch is
+    still being built on its driver thread, the executor is shut down
+    on the way out: its worker thread is joined, not left behind."""
+    from crypto_etl_airflow_spark.operators import parallel
+    from crypto_etl_airflow_spark.plans import pipeline_curate as pc
+
+    pools = []
+
+    class _RecordingPool(cf.ThreadPoolExecutor):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            pools.append(self)
+
+    building = threading.Event()
+
+    def slow_semdedup(*_args, **_kwargs):
+        building.set()
+        time.sleep(0.5)
+
+    def failing_widen(_df):
+        building.wait(10)
+        raise RuntimeError("text chain failed")
+
+    monkeypatch.delenv("SPARK_GRAFT_PIPELINE_OVERLAP", raising=False)
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", _RecordingPool)
+    monkeypatch.setattr(pc, "semdedup_keep", slow_semdedup)
+    monkeypatch.setattr(parallel, "widen_small_input", failing_widen)
+    with pytest.raises(RuntimeError, match="text chain failed"):
+        pc._stages(spark, SF)
+    assert building.is_set()
+    [pool] = pools
+    assert pool._threads
+    assert not any(t.is_alive() for t in pool._threads)

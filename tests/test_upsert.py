@@ -83,6 +83,17 @@ def test_partitioned_write(spark, tmp_path):
     )
     upsert_append(spark, batch, path, KEYS, partition_by=["dt"])
     assert spark.read.parquet(path).count() == 2
+    # keys that include the date-typed partition column: the key read
+    # takes its type from the batch and its values from the directory
+    # names, and still matches the stored keys
+    keys = ["crypto_id", "dt"]
+    assert upsert_append(spark, batch, path, keys, partition_by=["dt"]) == 0
+    day2 = dt.datetime(2024, 1, 2, 0, 0)
+    later = _batch(spark, [("btc", 9.0, T1), ("btc", 3.0, day2)]).withColumn(
+        "dt", F.to_date("extracted_at")
+    )
+    assert upsert_append(spark, later, path, keys, partition_by=["dt"]) == 1
+    assert spark.read.parquet(path).count() == 3
 
 
 class _FakeJdbc:
@@ -381,3 +392,26 @@ def test_upsert_append_heals_crashed_partition_swap(spark, tmp_path):
     ) == 1
     got = sorted((r.id, r.day, r.v) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a", 1.0), (2, "b", 2.0), (3, "a", 3.0)]
+
+
+@pytest.mark.parametrize(
+    "stored, offered",
+    [("int", "string"), ("string", "int"), ("bigint", "int")],
+)
+def test_key_type_mismatch_raises_without_appending(
+    spark, tmp_path, stored, offered
+):
+    """The anti-join reads the stored keys with the batch's key types.
+    A stored key column of another type fails that read, so the call
+    raises before the append and no key is written twice."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, 1.0)], "k int, v double").selectExpr(
+        f"cast(k as {stored}) as k", "v"
+    ).write.parquet(path)
+    batch = spark.createDataFrame([(1, 2.0), (2, 3.0)], "k int, v double")
+    batch = batch.selectExpr(f"cast(k as {offered}) as k", "v")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        upsert_append(spark, batch, path, ["k"])
+    got = spark.read.parquet(path).collect()
+    assert [(str(r.k), r.v) for r in got] == [("1", 1.0)]
+
